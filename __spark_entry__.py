@@ -537,9 +537,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from palladian_spark.operators.mentions import detect_mentions
 
         corpus = _capitalized_corpus(_read(spark, sf_dir, "documents"))
-        return detect_mentions(
-            corpus, text_col="content", tagger="candidates", keep_cols=["doc_id"]
-        )
+        return detect_mentions(corpus, text_col="content", keep_cols=["doc_id"])
 
     def ner_reference_agreement(spark, sf_dir):
         # The north-rule acceptance bar AS a contract query: train on the

@@ -245,15 +245,6 @@ def xml_to_column_text(xml_text: str, separator: str = "\t") -> str:
     return "".join(out)
 
 
-def slash_to_column(slash_text: str, separator: str = "\t") -> str:
-    """``token/TAG`` stream -> column lines
-    (FileFormatParser.slashToColumn :411-423)."""
-    out: list[str] = []
-    for m in regex.finditer(r"(.+?)/([A-Z0-9_]{1,100}?)\s", slash_text, regex.DOTALL):
-        out.append(m.group(1) + separator + m.group(2) + "\n")
-    return "".join(out)
-
-
 def column_to_slash(
     column_text: str, separator: str = "\t", slash_sign: str = "|"
 ) -> str:
@@ -266,27 +257,6 @@ def column_to_slash(
             continue
         out.append(parts[0] + slash_sign + parts[1] + " ")
     return "".join(out)
-
-
-def bracket_to_xml_text(input_text: str) -> str:
-    """``[TAG span ]`` -> ``<TAG>span</TAG>``
-    (FileFormatParser.bracketToXmlText :452-464)."""
-    output = input_text
-    pattern = regex.compile(
-        r"\[(\w+)\s([^\]]+?)(\s([^\]]+?))*?\s{0,2}\]",
-        regex.DOTALL | regex.IGNORECASE,
-    )
-    for m in pattern.finditer(input_text):
-        whole = m.group(0)
-        tag_name = whole[1 : whole.index(" ")].strip()
-        tag_content = whole[whole.index(" ") + 1 : whole.rindex("]")].strip()
-        output = output.replace(whole, f"<{tag_name}>{tag_content}</{tag_name}>")
-    return output
-
-
-def bracket_to_column(input_text: str, separator: str = "\t") -> str:
-    """Bracket -> XML -> column (FileFormatParser.bracketToColumn :466-469)."""
-    return xml_to_column_text(bracket_to_xml_text(input_text), separator)
 
 
 def get_seed_annotations(column_text: str, seeds_per_concept: int) -> list[Annotation]:

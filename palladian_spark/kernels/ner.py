@@ -248,15 +248,6 @@ def set_entity_dictionary(model: NerModel, dictionary_text: str, min_count: int 
     model._entity_values_ci = None  # invalidate the case-insensitive cache
 
 
-def train_from_annotations(annotations: list[Annotation], min_count: int = 1) -> NerModel:
-    """Annotation-only training mode — no corpus file, entity + annotation
-    dictionaries only (PalladianNer.train(List<Annotation>) :320-325)."""
-    model = NerModel()
-    model.entity_dictionary = build_entity_dictionary(annotations, min_count)
-    model.annotation_dictionary = build_annotation_dictionary(annotations, min_count)
-    return model
-
-
 def equalize_type_counts(annotations: list[Annotation]) -> list[Annotation]:
     """Per-tag downsample to the rarest tag's count (trainEnglish
     :390-404). The reference samples RANDOMLY (MathHelper.sample, unseeded
@@ -541,40 +532,6 @@ def tag_text(
 
         tagged.extend(date_time_tag_full(text))
     return remove_nested(tagged)  # T12 removeNested (:471)
-
-
-def combine_annotations(annotations: list[Annotation]) -> list[Annotation]:
-    """T13 (language-independent mode): merge adjacent same-tag annotations
-    (start == prev.end + 1). Reference: combineAnnotations (:573-601)."""
-    combined: list[Annotation] = []
-    previous: Annotation | None = None
-    previous_combined: Annotation | None = None
-    for current in sorted(annotations, key=sort_key):
-        if current.tag.lower() == "o":
-            continue
-        if (
-            previous is not None
-            and current.tag.lower() == previous.tag.lower()
-            and current.start == previous.end + 1
-        ):
-            if previous_combined is None:
-                previous_combined = previous
-            merged = Annotation(
-                previous_combined.start,
-                previous_combined.value + " " + current.value,
-                previous.tag,
-            )
-            if combined and combined[-1] == previous_combined:
-                combined.pop()
-            elif combined and combined[-1] == previous:
-                combined.pop()
-            combined.append(merged)
-            previous_combined = merged
-        else:
-            combined.append(current)
-            previous_combined = None
-        previous = current
-    return combined
 
 
 def train_english(

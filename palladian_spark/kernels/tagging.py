@@ -1,7 +1,9 @@
 """Regex-based mention taggers and the Annotation model.
 
 Each tagger returns a list of Annotation(start, value, tag) tuples over a
-single text blob; the Spark layer vectorizes these over Arrow batches.
+single text blob; the NER, geo and preprocessing UDFs call them over Arrow
+batches. The Spark StringTagger scan (operators/mentions.py) runs
+STRING_TAGGER_REGEX in the JVM instead, with string_tag as its golden twin.
 """
 
 from __future__ import annotations
@@ -67,16 +69,26 @@ def remove_nested(annotations: list[Annotation]) -> list[Annotation]:
 # ---------------------------------------------------------------------------
 # StringTagger: English entity-candidate alternation regex.
 # Reference: extraction/entity/StringTagger.java:25-77. The alternation order
-# is semantically significant (leftmost-first) and is preserved exactly; the
-# only dialect changes are \p{Ll} (supported by the `regex` module) and
-# literal curly apostrophes.
+# is semantically significant (leftmost-first) and is preserved exactly. The
+# pattern is written in the common subset of Python `regex` and
+# java.util.regex, so operators/mentions.py runs it unchanged in the JVM:
+# \p{Ll} and literal curly apostrophes mean the same in both, and Java's
+# ASCII-only \s is spelled out as [ \t\n\x0B\f\r] (Python's \s would also
+# match Unicode spaces such as U+2003 and split "Bank of Scotland").
+# java.util.regex recurses once per iteration of a repeated group (about
+# 1.5 KB of thread stack each), so the reference's unbounded `*`/`+`/`{1,}`
+# on groups overflow a 1 MB task-thread stack on a run of ~500 Title-Case
+# words and the StackOverflowError takes down the Spark JVM. Every such
+# repetition is capped at 64 here, in both engines: matches with at most 64
+# repetitions per group are the reference's, and longer runs split into
+# consecutive matches instead of crashing (worst case ~270 KB of stack).
 # ---------------------------------------------------------------------------
 _CAMEL_CASE_WORDS = r"(GmbH|LLC)"
 _SUFFIXES = r"((?<=(Inc|Corp|Co|Ave))\.)?"
 
 STRING_TAGGER_REGEX = (
     # dashes ("Ontario-based", "St. Louis-based")
-    r"([A-Z][a-z]\. )?([A-Z]{1}[A-Za-z\p{Ll}]+(-[a-z\p{Ll}]+)(-[A-Za-z\p{Ll}]+)*)"
+    r"([A-Z][a-z]\. )?([A-Z]{1}[A-Za-z\p{Ll}]+(-[a-z\p{Ll}]+)(-[A-Za-z\p{Ll}]+){0,64})"
     r"|"
     # A. Anderson
     r"([A-Z]\.)( )?[A-Z]{1}['’A-Za-z\p{Ll}]{1,100}"
@@ -88,24 +100,24 @@ STRING_TAGGER_REGEX = (
     r"([A-Z][a-z\p{Ll}]{0,2}\.) [A-Z]{1}[A-Za-z\p{Ll}]{1,100}( [A-Z]{1}[A-Za-z\p{Ll}]{1,100})?"
     r"|"
     # A.B.C. Anderson
-    r"([A-Z]\.)+( ([A-Z]{1}([A-Za-z-\p{Ll}0-9&]+))+(([ ])*[A-Z]+([A-Za-z-\p{Ll}0-9]*)){0,10})*"
+    r"([A-Z]\.)+( ([A-Z]{1}([A-Za-z-\p{Ll}0-9&]+)){1,64}(([ ])*[A-Z]+([A-Za-z-\p{Ll}0-9]*)){0,10}){0,64}"
     r"|"
     # ending with dash ("Real- Rumble" should be two words)
-    r"([A-Z][A-Za-z\p{Ll}]+ )*[A-Z][A-Za-z\p{Ll}]+(?=-+? )"
+    r"([A-Z][A-Za-z\p{Ll}]+ ){0,64}[A-Z][A-Za-z\p{Ll}]+(?=-+? )"
     r"|"
     # small with dash (ex-President)
     r"([A-Z][A-Za-z\p{Ll}]+ )?([a-z\p{Ll}]+-[A-Z][A-Za-z\p{Ll}0-9]+)"
     r"|"
     # X Y of Z / X of Y Z ("National Bank of Scotland", "L’Arc de Triomphe")
-    r"(([A-Z]{1}['’]?[A-Za-z\p{Ll}]+ )+(?:of|de) (([A-Z]{1}[A-Za-z-\p{Ll}]+)(?!([a-z-]{0,20}\s[A-Z]))))"
-    r"|([A-Z]{1}[A-Za-z-\p{Ll}]+ of( [A-Z]{1}[A-Za-z\p{Ll}]+){1,})"
+    r"(([A-Z]{1}['’]?[A-Za-z\p{Ll}]+ ){1,64}(?:of|de) (([A-Z]{1}[A-Za-z-\p{Ll}]+)(?!([a-z-]{0,20}[ \t\n\x0B\f\r][A-Z]))))"
+    r"|([A-Z]{1}[A-Za-z-\p{Ll}]+ of( [A-Z]{1}[A-Za-z\p{Ll}]+){1,64})"
     r"|"
     # title-case sequences, GmbH/LLC, Inc./Corp./Co./Ave. suffixes
     r"([A-Z]{1}([a-z-\p{Ll}0-9®]+)(( " + _CAMEL_CASE_WORDS + r")?"
-    r"(([ &])*([A-Z]['’])?[A-Z]{1}([a-z-\p{Ll}0-9®]+))?)*)" + _SUFFIXES +
+    r"(([ &])*([A-Z]['’])?[A-Z]{1}([a-z-\p{Ll}0-9®]+))?){0,64})" + _SUFFIXES +
     r"|"
     # O'Sullivan, D&G, all-caps runs
-    r"((([A-Z]{1}([A-Za-z-\p{Ll}0-9&]+|['’][A-Z][A-Za-z]{2,20}))+"
+    r"((([A-Z]{1}([A-Za-z-\p{Ll}0-9&]+|['’][A-Z][A-Za-z]{2,20})){1,64}"
     r"(([ &])*[A-Z]+(['’][A-Z])?([A-Za-z-\p{Ll}0-9®]*)){0,10})(?!(\.[A-Z])+))" + _SUFFIXES +
     r"|"
     # camel case (iPhone 4)

@@ -9,7 +9,6 @@ variable-length lookbehinds that Python's `re` lacks).
 from __future__ import annotations
 
 import unicodedata
-from functools import lru_cache
 from typing import Iterable, Iterator
 
 import regex
@@ -72,15 +71,6 @@ def iterate_tokens(text: str) -> Iterator[tuple[int, str]]:
 def tokenize(text: str) -> list[str]:
     """Token values only (reference: Tokenizer.java:46-49)."""
     return [v for _, v in iterate_tokens(text)]
-
-
-def split_sentences_en(text: str) -> list[str]:
-    """Split English text into sentences at SENTENCE_SPLIT_REGEX_EN boundaries.
-
-    Reference: Tokenizer.getSentences (Tokenizer.java:299-356) — the boundary
-    match itself stays attached to the left sentence.
-    """
-    return _split_sentences(text, _SENTENCE_PATTERN_EN)
 
 
 def split_sentences_de(text: str) -> list[str]:
@@ -314,17 +304,6 @@ def any_contains_word(words: Iterable[str], search_string: str) -> bool:
 def is_punctuation(ch: str) -> bool:
     """Reference: StringHelper.isPunctuation (StringHelper.java:529-531)."""
     return ch in ".,:;?!"
-
-
-def reverse_string(text: str) -> str:
-    return text[::-1]
-
-
-@lru_cache(maxsize=64)
-def compile_regex(pattern: str, flags: int = 0):
-    """Compile-once cache so per-executor UDF calls reuse patterns
-    (counterpart of the reference's static Pattern constants)."""
-    return regex.compile(pattern, flags)
 
 
 def detect_sentences(text: str) -> list[tuple[int, str]]:

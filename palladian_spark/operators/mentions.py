@@ -1,16 +1,19 @@
 """Mention detection over a DataFrame text column.
 
-Spark mapping of the reference taggers (SURVEY.md §2.2): one vectorized
-pandas-UDF pass per content blob returning an array of annotation structs,
-exploded into a mentions DataFrame. Regexes compile once per executor
-(module import time), the counterpart of the reference's static Pattern
-constants (StringTagger.java:17).
+Spark mapping of the reference taggers (SURVEY.md §2.2). The StringTagger
+candidate scan (``detect_mentions``) is pure JVM: java.util.regex is the
+reference's own dialect, so the kernel pattern
+(``kernels.tagging.STRING_TAGGER_REGEX``, golden-tested through
+``kernels.tagging.string_tag``) runs unchanged as one
+``regexp_extract_all`` per content blob, with no Python hop. Gazetteer
+matching (``dictionary_mentions``) stays a pandas UDF over a broadcast
+alternation.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -21,7 +24,6 @@ from pyspark.sql.types import (
 )
 
 from ..kernels import tagging
-from ..kernels.dateformats import date_time_tag_full
 from .util import spread
 
 ANNOTATION_STRUCT = StructType(
@@ -33,62 +35,56 @@ ANNOTATION_STRUCT = StructType(
     ]
 )
 
-_TAGGERS = {
-    "candidates": tagging.string_tag,     # StringTagger.java:13-77
-    "urls": tagging.url_tag,              # UrlTagger.java:13-24
-    # full DateAndTimeTagger.DEFAULT surface (DateAndTimeTagger.java:25-61,
-    # RegExp.ALL_DATE_FORMATS + years-in-context), golden-gated vs the
-    # actual Java tagger in tests/test_date_url_taggers.py
-    "dates": date_time_tag_full,
-    "twitter": tagging.twitter_tag,       # TwitterTagger.java:16-23
-    "smileys": tagging.smiley_tag,        # SmileyTagger.java:15-49
-}
-
-
-def _make_tagger_udf(tagger_name: str):
-    tagger = _TAGGERS[tagger_name]
-
-    @F.pandas_udf(ArrayType(ANNOTATION_STRUCT))
-    def tag_series(texts: pd.Series) -> pd.Series:
-        return texts.map(
-            lambda t: [
-                (a.start, a.end, a.value, a.tag) for a in tagger(t or "")
-            ]
-        )
-
-    return tag_series
-
 
 def detect_mentions(
     df: DataFrame,
     text_col: str = "content",
-    tagger: str = "candidates",
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """df -> one row per mention: (keep_cols..., start, end, value, tag).
+    """df -> one StringTagger candidate per row: (keep_cols..., start, end,
+    value, tag), the rows of ``kernels.tagging.string_tag``.
 
-    The UDF is the only Python hop; everything downstream (explode, filters,
-    joins) stays JVM-side so Catalyst prunes the scan to keep_cols + text.
+    Values come from one ``regexp_extract_all`` over the protected-space-
+    cleaned text (``translate`` maps U+00A0 to a space one-for-one, so
+    offsets are kept). Java has no match-position array, so start(i) is
+    rebuilt as in the DuckDB oracle: the running sum of the gap lengths of
+    ``split(clean, pattern, -1)`` up to gap i plus the match lengths before
+    match i, one window sum per document. A consumer that reads only
+    values/tags lets Catalyst prune the ``split`` and the window, leaving
+    one regex pass (tests/test_spark_operators.py pins this).
     """
     keep_cols = keep_cols if keep_cols is not None else [c for c in df.columns if c != text_col]
-    udf = _make_tagger_udf(tagger)
-    df = spread(df)
-    # explode_outer, NOT explode: InferFiltersFromGenerate turns an inner
-    # generate over a UDF column into `Filter size(udf(..)) > 0` +
-    # `Generate udf(..)` and pushes the filter below the spread()
-    # repartition — the tagger UDF then runs TWICE, once of them on the
-    # SINGLE-partition pre-shuffle side (measured: the whole corpus
-    # serially). The outer variant infers no filter; the null-guard above
-    # the generate drops the empty-array rows the inner explode would
-    # have dropped, JVM-side. (Same pattern as similarity_search.
-    # _explode_tables.)
+    clean = F.translate(F.col(text_col), "\u00a0", " ")
+    pattern = tagging.STRING_TAGGER_REGEX
+    # posexplode_outer, NOT posexplode: InferFiltersFromGenerate turns an
+    # inner generate into `Filter size(regexp_extract_all(..)) > 0` +
+    # `Generate`, evaluating the regex twice. The outer variant infers no
+    # filter; the null-guard drops the row it emits for null/empty content.
     exploded = (
-        df.select(*keep_cols, udf(F.col(text_col)).alias("_anns"))
-        .select(*keep_cols, F.explode_outer("_anns").alias("_a"))
-        .where(F.col("_a").isNotNull())
-        .select(*keep_cols, "_a.start", "_a.end", "_a.value", "_a.tag")
+        spread(df)
+        .select(
+            *keep_cols,
+            F.monotonically_increasing_id().alias("_doc"),
+            F.split(clean, pattern, -1).alias("_gaps"),
+            F.regexp_extract_all(clean, F.lit(pattern), 0).alias("_vals"),
+        )
+        .select(*keep_cols, "_doc", "_gaps", F.posexplode_outer("_vals").alias("_i", "value"))
+        .where(F.col("value").isNotNull())
+        .select(
+            *keep_cols, "_doc", "_i", "value",
+            F.length(F.element_at("_gaps", F.col("_i") + 1)).alias("_gap"),
+        )
     )
-    return exploded
+    length = F.length("value")
+    w = Window.partitionBy("_doc").orderBy("_i").rowsBetween(Window.unboundedPreceding, 0)
+    start = (F.sum(F.col("_gap") + length).over(w) - length).cast("int")
+    return exploded.withColumn("start", start).select(
+        *keep_cols,
+        "start",
+        (F.col("start") + length).alias("end"),
+        "value",
+        F.lit(tagging.CANDIDATE_TAG).alias("tag"),
+    )
 
 
 def dictionary_mentions(
@@ -133,8 +129,9 @@ def dictionary_mentions(
 
     return (
         spread(df).select(*keep_cols, tag_series(F.col(text_col)).alias("_anns"))
-        # explode_outer + null-guard: see detect_mentions — an inner
-        # explode would double-evaluate the UDF via InferFiltersFromGenerate
+        # explode_outer + null-guard: an inner explode would make
+        # InferFiltersFromGenerate push a `size(udf(..)) > 0` filter below
+        # spread() and evaluate the UDF twice
         .select(*keep_cols, F.explode_outer("_anns").alias("_a"))
         .where(F.col("_a").isNotNull())
         .select(*keep_cols, "_a.start", "_a.end", "_a.value", "_a.tag")

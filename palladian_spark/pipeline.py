@@ -51,15 +51,19 @@ def extract_triples(
 
     def build_mentions() -> DataFrame:
         if model is not None:
-            return tag_documents(lineage, model, text_col=content_col, keep_cols=keep)
-        return detect_mentions(lineage, text_col=content_col, keep_cols=keep)
+            mentions = tag_documents(lineage, model, text_col=content_col, keep_cols=keep)
+        else:
+            mentions = detect_mentions(lineage, text_col=content_col, keep_cols=keep)
+        # no triple reads start/end: projecting them away lets Catalyst prune
+        # the offset reconstruction, so the scan is one regex pass per blob
+        return mentions.select(*keep, "value", "tag")
 
     if store is not None:
         mentions = store.run("mentions", build_mentions, lineage_col="content_sha256")
     else:
         # four downstream branches (mentioned-in, co-occurrence, instance-of,
         # canonicalization) all consume mentions; without a cache each branch
-        # would re-run the regex-UDF scan over every content blob.
+        # would re-run the mention scan over every content blob.
         # localCheckpoint, not persist: repeated extract_triples calls in one
         # session would otherwise pin mention caches forever (no unpersist
         # placement exists — the returned plan is consumed lazily by the

@@ -69,6 +69,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def read_table(spark: SparkSession, sf_dir: str, name: str):
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

@@ -59,8 +59,9 @@ def stream_triples(
 ) -> DataFrame:
     """Streaming documents -> streaming (subj, pred, obj, content_sha256,
     support) triples. Every operator here is stateless per document, so
-    the micro-batch plan is identical to the batch plan: one Arrow hop
-    for the mention UDF, JVM-side lineage/explode/pair logic.
+    the micro-batch plan is identical to the batch plan: one JVM regex
+    pass for the StringTagger mentions (their offsets are pruned, since no
+    triple reads them), then JVM-side lineage/explode/pair logic.
 
     With ``gazetteer`` the mention stage is the DictionaryTagger
     (broadcast alternation) instead of the StringTagger candidate regex —

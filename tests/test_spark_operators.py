@@ -105,16 +105,44 @@ def test_no_double_udf_evaluation_in_plans(spark):
     shingle / band UDF TWICE, once of them on the single-partition
     pre-shuffle side (measured: the whole corpus serially). All
     UDF-feeding generates now use *_outer + a null-guard; this pins the
-    physical plans free of the telltale inferred size-filter."""
+    physical plans free of the telltale inferred size-filter. The same
+    hazard holds for the JVM StringTagger generator (the regex would run
+    twice), and the flagship mention path must stay free of Python nodes,
+    with its offset reconstruction pruned where no consumer reads it."""
     import __spark_entry__ as e
+    from palladian_spark.pipeline import documents_as_source, extract_triples
+
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
 
     sf = "/root/testdata/sf0.001"
     qs = e.queries()
     for name in ["string_tagger_candidates", "dict_mentions",
                  "doc_dates_normalized", "doc_ngram_jaccard",
-                 "doc_cooccur_sentence"]:
-        plan = qs[name](spark, sf)._jdf.queryExecution().executedPlan().toString()
+                 "doc_cooccur_sentence", "kg_triples"]:
+        plan = executed(qs[name](spark, sf))
         assert "size(pythonUDF" not in plan, name
+        assert "size(regexp_extract_all(" not in plan, name
+        if name in ("string_tagger_candidates", "kg_triples"):
+            assert "ArrowEvalPython" not in plan, name
+            assert "BatchEvalPython" not in plan, name
+
+    stages = {}
+
+    class StageRecorder:
+        """StageStore stand-in: builds each stage without writing it."""
+
+        def run(self, stage, build, lineage_col=None):
+            stages[stage] = build()
+            return stages[stage]
+
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    extract_triples(documents_as_source(docs), canonicalize=False, store=StageRecorder())
+    plan = executed(stages["mentions"])
+    assert plan.count("regexp_extract_all(") == 1
+    for node in ("size(regexp_extract_all(", "split(", "Window",
+                 "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
 
 
 def test_simhash_wide_pairs_complete(docs):

@@ -219,7 +219,8 @@ def run_once(cores: int, repl: int) -> dict:
         # blocks plus the concat stage's garbage left G1 debt that was
         # collected DURING the timed window, inflating the 8-core
         # process-tree CPU ~1.5x (stage-metric probe: task CPU inflates
-        # only 1.12x; see tools/probe_stage_cpu.py) and deflating the
+        # only 1.12x; per-stage task CPU is in the Spark event log, see
+        # `python3 perfbench/run.py --trace 1`) and deflating the
         # measured efficiency to ~0.65. Parquet staging moves scaffolding
         # cost out of the JVM heap entirely.
         stage_dir = os.path.join(
