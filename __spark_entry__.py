@@ -350,11 +350,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return fr(docs, "lang", ["source", "first_word", "len_bucket"])
 
     def bpe_merges(spark, sf_dir):
-        # distributed BPE vocabulary training (Sennrich 2016): pair counts
-        # and merges run over the DISTINCT-WORD table, so per-round cost is
-        # vocabulary-sized, not corpus-sized; the argmax merge is a 1-row
-        # collect per round. Fully recomputed by an unrolled window-function
-        # CTE chain in DuckDB (greedy run semantics via gaps-and-islands).
+        # BPE vocabulary training (Sennrich 2016): one Spark scan collects
+        # the DISTINCT-WORD frequency table, and the merge rounds run in the
+        # driver over it, with no Spark job per round. Fully recomputed by
+        # an unrolled window-function CTE chain in DuckDB (greedy run
+        # semantics via gaps-and-islands).
         from palladian_spark.operators.bpe import bpe_merges as _bpe
 
         res = _bpe(_read(spark, sf_dir, "documents"), n_merges=8)

@@ -128,7 +128,7 @@ def classify(
         probability = model.prior(category)
         if log_space:
             probability = math.log(probability)
-        for name in learned:
+        for name in sorted(learned):
             value = feats.get(name)
             if value is None:
                 continue

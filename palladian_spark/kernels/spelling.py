@@ -50,10 +50,13 @@ import html
 import re
 import unicodedata
 
-# Java: Pattern.compile("[\\w\\p{L}-]+") over the LOWERCASED line.
-# Python re has no \p{L}; [^\W\d_] with the Unicode flag is exactly
-# "Unicode letter", so the union below equals Java's class.
-_DICT_TOKEN_RE = re.compile(r"(?:[A-Za-z0-9_\-]|[^\W\d_])+", re.UNICODE)
+import regex
+
+# Java: Pattern.compile("[\\w\\p{L}-]+") over the LOWERCASED line. Java's
+# \w is ASCII-only, so the class is ASCII word chars, '-' and \p{L}.
+# Python re has no \p{L} and its [^\W\d_] also takes Nl/No characters
+# (Ⅻ, ²), so the exact class needs the `regex` module.
+_DICT_TOKEN_RE = regex.compile(r"(?:[A-Za-z0-9_\-]|\p{L})+")
 
 # Java: "[0-9" + Pattern.quote("<>=-*'#/+'&.") + "]"
 _NO_CORRECTION_RE = re.compile(r"[0-9<>=\-*'#/+&.]")

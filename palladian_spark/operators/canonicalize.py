@@ -18,14 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from ..kernels.similarity import jaro_winkler_similarity
-
-# 31-bit Mersenne prime: a*h'+b stays < 2^62 (no ANSI long overflow)
-_MERSENNE = (1 << 31) - 1
-
-
 from .util import band_hashes_for_shingles, banding_params
-
-_banding_params = banding_params
 
 
 def _band_hashes_one(value: str, a, b, band_size: int, shingle_n: int) -> list[int]:
@@ -45,7 +38,7 @@ def _make_band_udf(num_hashes: int, band_size: int, shingle_n: int):
     (no whole-stage codegen), and a 16-permutation nested-lambda expression
     additionally pays seconds of analysis time per query.
     """
-    a, b = _banding_params(num_hashes)
+    a, b = banding_params(num_hashes)
 
     @F.pandas_udf(ArrayType(LongType()))
     def band_hashes(vals: pd.Series) -> pd.Series:
@@ -317,7 +310,7 @@ def _local_canonicalize(
     serial) pay the parallel fixed costs."""
     from collections import defaultdict
 
-    a, b = _banding_params(num_hashes)
+    a, b = banding_params(num_hashes)
     values = [v for v, _ in freq_rows]
     buckets: dict[tuple[int, object], list[str]] = defaultdict(list)
     for v in values:

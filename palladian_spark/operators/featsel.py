@@ -168,7 +168,16 @@ def mdlp_fit_boundaries(
     """Fit Fayyad–Irani MDLP cut points for one numeric column,
     distributed: aggregate to (value, category, count) — distinct-value
     sized — then run the weighted kernel recursion on the driver
-    (Binner.java:104-186 semantics, parity-tested)."""
+    (Binner.java:104-186 semantics, parity-tested).
+
+    Driver-memory regime: the collect is distinct-(value, category)
+    sized, but the kernel expands each group back to one list entry per
+    input row and scans that list once per recursion level in Python, so
+    driver memory and time are ROW-sized (a list slot per row, copied by
+    the sort and each level's slices). Right when the column has ≤ ~10M
+    rows; beyond that the recursion must run over the grouped rows
+    themselves (cumulative counts at value changes equal the group
+    sums)."""
     from palladian_spark.kernels.featsel import mdlp_boundaries_weighted
 
     rows = (

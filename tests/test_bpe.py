@@ -1,8 +1,8 @@
-"""Distributed BPE trainer: kernel goldens + Spark/driver-loop behavior.
+"""BPE trainer: kernel goldens + Spark-surface behavior.
 
 The greedy-merge kernel is pinned against the classic left-to-right scan
 (Sennrich et al. 2016 semantics) including the run cases the SQL oracle
-resolves via gaps-and-islands; the Spark trainer is pinned against a
+resolves via gaps-and-islands; the trainer is pinned against a
 hand-computed corpus and a pure-Python reference trainer."""
 
 import pytest
@@ -105,11 +105,11 @@ def test_bpe_matches_reference_trainer(spark):
 
 
 def test_bpe_train_checkpoint_resume(spark, tmp_path):
-    """Every merge round is a resumable stage: a 3-round run leaves a
-    store a later 6-round run extends WITHOUT recomputing rounds 1-3
-    (pinned by poisoning the input — resumed rounds must come from the
-    manifests, not the corpus), and the extended result equals a fresh
-    6-round run exactly."""
+    """The word-frequency table (the only corpus-sized work) is a
+    resumable stage: a 3-round run leaves a store a later 6-round run
+    trains on WITHOUT rescanning the corpus (pinned by poisoning the
+    input — the vocabulary must come from the manifest, not the corpus),
+    and the result equals a fresh 6-round run exactly."""
     from palladian_spark.operators.bpe import bpe_train
     from palladian_spark.sources.checkpoint import StageStore
 
@@ -121,19 +121,14 @@ def test_bpe_train_checkpoint_resume(spark, tmp_path):
     m3, _ = bpe_train(docs, n_merges=3, store=store)
     assert len(m3) == 3
 
-    # resume with a POISONED corpus: rounds 1-3 (and the word table) must
-    # replay from the store, so the poison can only affect... nothing —
-    # round 0 is also checkpointed, so the full 6-round result must equal
-    # a fresh clean 6-round run
     poisoned = spark.createDataFrame([(9, "zzz zzz qqq")], ["doc_id", "text"])
     m6, words6 = bpe_train(poisoned, n_merges=6, store=store)
     fresh6, wordsf = bpe_train(docs, n_merges=6)
     assert m6 == fresh6
     assert m6[:3] == m3
-    got = {(r["word"], r["freq"], tuple(r["tokens"])) for r in words6.collect()}
-    want = {(r["word"], r["freq"], tuple(r["tokens"])) for r in wordsf.collect()}
+    got = {(w, f, tuple(toks)) for w, f, toks in words6}
+    want = {(w, f, tuple(toks)) for w, f, toks in wordsf}
     assert got == want
-    wordsf.unpersist()
 
 
 def test_bpe_early_stop_and_hostile_inputs(spark):
@@ -152,34 +147,9 @@ def test_bpe_early_stop_and_hostile_inputs(spark):
     assert bpe_token_counts(docs2, n_merges=3).count() == 0
 
 
-def test_sampled_trainer_exact_when_vocab_fits(spark, sf_dir):
-    # full-vocabulary sample -> the in-driver trainer must reproduce the
-    # distributed merge list EXACTLY (same tie-breaks, same counts)
-    import os
-    from palladian_spark.operators.bpe import bpe_merges, bpe_train_sampled
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    dist = [
-        (r["merge_rank"], r["left"], r["right"], r["pair_count"])
-        for r in bpe_merges(docs, n_merges=8).collect()
-    ]
-    sampled = bpe_train_sampled(docs, n_merges=8, sample_words=10_000_000)
-    assert sampled == sorted(dist)
-
-
-def test_sampled_trainer_truncation_smoke(spark, sf_dir):
-    import os
-    from palladian_spark.operators.bpe import bpe_train_sampled
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    merges = bpe_train_sampled(docs, n_merges=5, sample_words=15)
-    assert 1 <= len(merges) <= 5
-    assert all(cnt > 0 for _, _, _, cnt in merges)
-
-
 def test_local_trainer_many_rounds_fast():
-    # the production-vocab regime the distributed loop cannot serve:
-    # hundreds of merge rounds in well under a second in-driver
+    # the production-vocab regime: hundreds of merge rounds in well
+    # under a second in-driver
     import time
     from palladian_spark.operators.bpe import _train_local
 
@@ -190,6 +160,25 @@ def test_local_trainer_many_rounds_fast():
                  for b in ("ing", "er", "ed", "ly", "ion")
                  for c in ("fast", "slow", "big", "small", "wide"))]
     t0 = time.time()
-    merges = _train_local(vocab, 300)
+    merges, _ = _train_local(vocab, 300)
     dt = time.time() - t0
     assert len(merges) >= 100 and dt < 5.0
+
+
+def test_build_job_budget(spark, sf_dir):
+    """Building either BPE query collects the word table once; the merge
+    rounds launch no Spark job."""
+    import os
+    from palladian_spark.operators.bpe import bpe_merges, bpe_token_counts
+
+    sc = spark.sparkContext
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    try:
+        for name, build in (("merges", bpe_merges), ("token_counts", bpe_token_counts)):
+            group = f"bpe_build_budget_{name}"
+            sc.setJobGroup(group, group)
+            build(docs, n_merges=8)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert len(jobs) <= 3, (name, len(jobs))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -97,3 +97,29 @@ def test_accuracy_gates(name):
     )
     accuracy = correct / len(test_rows)
     assert accuracy > 0.77, accuracy
+
+
+_HASHSEED_SCRIPT = """
+from palladian_spark.kernels.naive_bayes import classify, train
+rows = [({f"f{j}": ((i * 7 + j * 13) % 29) / 3.0 + j for j in range(24)}, "ab"[i % 2])
+        for i in range(40)]
+print(repr(classify({f"f{j}": j / 7.0 + 1.5 for j in range(24)}, train(rows))))
+"""
+
+
+def test_classify_independent_of_hash_seed():
+    # the feature set is a Python set: the log-space additions must not
+    # follow its PYTHONHASHSEED-dependent iteration order
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    outs = {
+        subprocess.run(
+            [sys.executable, "-c", _HASHSEED_SCRIPT],
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            cwd=root, capture_output=True, text=True, check=True, timeout=120,
+        ).stdout
+        for seed in ("1", "2", "3", "4")
+    }
+    assert len(outs) == 1, outs

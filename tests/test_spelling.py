@@ -69,6 +69,8 @@ def test_manual_mappings_and_dict_build():
     assert words["alpha"] == 1 and words["beta"] == 2
     assert words["alpha-beta"] == 1
     assert ctx["alpha_beta"] == 1 and ctx["gamma_beta"] == 1
+    # Java's [\w\p{L}-] excludes Nl/No characters (superscripts, roman numerals)
+    assert build_dictionary(["x²y ⅻ"]) == ({"x": 1, "y": 1}, {"x_y": 1})
     sc = SpellChecker(words, ctx)
     sc.add_manual_mapping("cov", "cow")
     sc.add_manual_mapping("i pad", "ipad")
