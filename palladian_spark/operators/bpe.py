@@ -7,11 +7,11 @@ re-expressed for Spark's execution model:
 
 - The corpus compresses to a DISTINCT-WORD frequency table (one groupBy).
   That scan is the only work that touches raw text, and the only Spark
-  job the trainer runs.
+  action the trainer runs.
 - The ``(word, freq)`` table is collected and the merge rounds run in the
   driver (:func:`_train_local`), with incremental pair-count maintenance:
   after a merge only the words containing that pair are re-tokenized.
-  A merge round costs milliseconds, not a Spark job.
+  A merge round is driver work, not a Spark job.
 - Encoding (:func:`bpe_token_counts`) joins each document's words against
   the trained ``(word, token count)`` table.
 
